@@ -51,6 +51,7 @@ from etl_pipeline_from_mongo_json_to_postgre_spark.operators import (
     transform_queries,
     variant_ingest,
 )
+from etl_pipeline_from_mongo_json_to_postgre_spark.session import tune_for_oracle
 from etl_pipeline_from_mongo_json_to_postgre_spark.sources import (
     binary_source,
     csv_source,
@@ -273,20 +274,27 @@ def entry(spark: SparkSession) -> DataFrame:
     through the mapping/transform engine, pivot the audit trail
     (object_name x processing_status) — the reference's dashboard A1
     over a real engine-produced audit frame."""
-    return transform_queries.audit_status_pivot(spark, "/root/testdata/sf0.001")
+    return _ntz_outputs(transform_queries.audit_status_pivot)(
+        spark, "/root/testdata/sf0.001")
 
 
 def _ntz_outputs(fn: Callable) -> Callable:
-    """Cast every TIMESTAMP_LTZ output column to TIMESTAMP_NTZ at the
-    registry boundary.
+    """The registry boundary every entry call crosses (``entry()``
+    included): tune the caller's session once, then cast every
+    TIMESTAMP_LTZ output column to TIMESTAMP_NTZ.
 
-    Why: PySpark ``collect()`` converts TimestampType through the
+    The tune: the driver hands us its own default session (ANSI on,
+    any timezone); ``session.tune_for_oracle`` applies the engine's
+    conf table before the entry builds its plan, so no operator sets
+    confs itself.
+
+    The cast: PySpark ``collect()`` converts TimestampType through the
     PYTHON PROCESS timezone (datetime.fromtimestamp), so a non-UTC
     driver host would shift collected datetimes while the DuckDB oracle
     stays UTC-naive — a whole class of spurious hash mismatches
     (verified 2026-08-14: exactly the ts-output entries fail under
-    TZ=America/New_York, everything else green). Every query pins the
-    SESSION timezone to UTC (tune_for_oracle), so the LTZ->NTZ cast is
+    TZ=America/New_York, everything else green). The tune pins the
+    SESSION timezone to UTC, so the LTZ->NTZ cast is
     value-preserving, and NTZ collects to a naive datetime with no
     process-timezone involvement — parity now holds under ANY driver
     host timezone."""
@@ -296,7 +304,7 @@ def _ntz_outputs(fn: Callable) -> Callable:
 
     @wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        df = fn(spark, sf_dir)
+        df = fn(tune_for_oracle(spark), sf_dir)
         from pyspark.sql import functions as F
 
         for field in df.schema.fields:

@@ -9,7 +9,8 @@ Determinism discipline for oracle parity:
 - double aggregations go through exact DECIMAL arithmetic, then CAST to
   DOUBLE at the end (FP summation order differs between engines);
 - top-k queries always carry a unique tie-break key;
-- timestamps compare under UTC sessions (session.tune_for_oracle).
+- timestamps compare under UTC sessions (session.SQL_CONFS, applied
+  at the registry boundary).
 
 Scale notes are inline: broadcast hints on bounded dims, aggregate
 pushdown before joins, no driver-side collects anywhere.
@@ -17,17 +18,11 @@ pushdown before joins, no driver-side collects anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -40,7 +35,7 @@ def a1_pivot_status_count(spark, sf_dir):
     Pivot values are pinned (no extra distinct scan job) — at 100 TB the
     value domain must be declared, never discovered.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -52,13 +47,13 @@ def a1_pivot_status_count(spark, sf_dir):
 def a2_group_count(spark, sf_dir):
     """A2: frequency count, sorted client-side-free
     (reference ui/audit_dashboard.py:187-192)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(F.count("*").alias("cnt"))
 
 
 def a3_conditional_count(spark, sf_dir):
     """A3: COUNT(*) FILTER per day (reference postgres_audit_repository.py:72-84)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy(F.to_date("o_orderdate").alias("order_day")).agg(
         F.count("*").alias("total_docs"),
         F.count(F.when(F.col("o_totalprice") > 1000, 1)).alias("high_value_docs"),
@@ -67,7 +62,7 @@ def a3_conditional_count(spark, sf_dir):
 
 def a4_scalar_count(spark, sf_dir):
     """A4: filtered scalar count (reference ui/run_pipeline.py:436-450)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.filter(F.col("o_totalprice") > 5000).agg(
         F.count("*").alias("cnt")
     )
@@ -75,13 +70,13 @@ def a4_scalar_count(spark, sf_dir):
 
 def a5_max_date(spark, sf_dir):
     """A5: MAX(ts::date) latest-run lookup (reference ui/run_pipeline.py:453-469)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.agg(F.max(F.to_date("o_orderdate")).alias("latest_day"))
 
 
 def a6_kpis(spark, sf_dir):
     """A6+A8: KPI counts + distinct count (reference ui/audit_dashboard.py:53-76)."""
-    customer = _t(spark, sf_dir, "customer")
+    customer = load_table(spark, sf_dir, "customer")
     return customer.agg(
         F.count("*").alias("total_rows"),
         F.countDistinct("c_mktsegment").alias("distinct_segments"),
@@ -91,7 +86,7 @@ def a6_kpis(spark, sf_dir):
 
 def a8_distinct(spark, sf_dir):
     """A8: distinct non-null values (reference ui/audit_dashboard.py:69-71)."""
-    customer = _t(spark, sf_dir, "customer")
+    customer = load_table(spark, sf_dir, "customer")
     return (
         customer.select(F.col("c_mktsegment").alias("segment"))
         .where(F.col("segment").isNotNull())
@@ -104,7 +99,7 @@ def a11_grouping_sets(spark, sf_dir):
     ROLLUP/CUBE), via the Spark SQL surface: per-(returnflag, linestatus)
     leaves plus per-linestatus totals — but NOT per-returnflag or grand
     totals — in one shuffle."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     l.createOrReplaceTempView("lineitem_v")
     return spark.sql(
         """
@@ -125,7 +120,7 @@ def a12_stats_agg(spark, sf_dir):
     definitions; results are rounded past the partial-aggregation
     reorder noise (co-moments agree to ~1e-12 relative; display is 6
     decimals)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity")
     p = F.col("l_extendedprice")
     return l.groupBy("l_returnflag").agg(
@@ -142,7 +137,7 @@ def approx_distinct_users_sketch_raw(spark, sf_dir):
     the entire point at 100 TB. Sketch values are engine-specific, so
     this raw form is census/test-pinned (tests/test_analytics_ext.py);
     the registry entry is the derived-oracle gate below."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy("event_type")
         .agg(F.approx_count_distinct("user_id", rsd=0.01).alias("approx_users"))
@@ -164,7 +159,7 @@ def approx_distinct_users_sketch(spark, sf_dir):
     persisted shard sketches); the absolute error bound vs exact is
     the companion approx_distinct_users. NO exact countDistinct
     anywhere in this plan."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     whole = events.groupBy("event_type").agg(
         F.hll_sketch_estimate(
             F.hll_sketch_agg("user_id", F.lit(12))
@@ -208,7 +203,7 @@ def approx_distinct_rollup(spark, sf_dir):
     approx_distinct_users): emit the exact count plus within_bound =
     |merged-estimate - exact| / exact <= 5% (lgConfigK=12 => rsd
     ~1.6%, 3x margin); the oracle asserts TRUE."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     daily = events.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"))
@@ -236,7 +231,7 @@ def approx_distinct_rollup_sketch_raw(spark, sf_dir):
     ones. Estimates are engine-specific, so this raw form is pinned by
     tests/test_approx.py (sketch-only plan + positive estimates); the
     registry entry is the derived-oracle gate below."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     daily = events.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"))
@@ -262,7 +257,7 @@ def approx_distinct_rollup_sketch(spark, sf_dir):
     differs along the two paths; measured d=1488 vs w=1499 at sf0.1).
     The frame the driver hash-checks is group keys + booleans DuckDB
     asserts TRUE; no exact countDistinct anywhere in the plan."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     daily = events.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"))
@@ -301,7 +296,7 @@ def approx_distinct_users(spark, sf_dir):
     countDistinct here is deliberate verification overhead — the scale
     path a production run ships is approx_distinct_users_sketch, which
     carries only the sketch."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy("event_type")
         .agg(
@@ -344,7 +339,7 @@ def approx_value_quantiles(spark, sf_dir):
     + 2/n per group (the 2/n is the discrete-rank + tie margin). A
     real accuracy regression now fails instead of hiding inside a
     100x-too-wide band."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     vals = events.select("event_type", F.col("value").cast("double").alias("v"))
     qs = vals.groupBy("event_type").agg(
         F.percentile_approx("v", _QUANTILE_LEVELS, 10000).alias("qarr"),
@@ -388,7 +383,7 @@ def a9_rollup_counts(spark, sf_dir):
     (reporting.py:36-58); at 100 TB each extra pass is a full rescan, so
     the rollup folding matters. grouping_id disambiguates subtotal rows
     from genuinely-NULL keys."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -405,7 +400,7 @@ def a9_rollup_counts(spark, sf_dir):
 def a10_cube_counts(spark, sf_dir):
     """CUBE over (returnflag, linestatus): all four grouping
     combinations from one shuffle (same one-pass rationale as a9)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.cube("l_returnflag", "l_linestatus")
         .agg(
@@ -430,8 +425,8 @@ def j1_outer_join(spark, sf_dir):
     Aggregate FIRST, join after — shrinks the shuffled side from
     |orders| to |customers| before the join (map-side combine applies).
     """
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     agg = orders.groupBy("o_custkey").agg(
         F.count("*").alias("order_count"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -453,8 +448,8 @@ def j2_lookup_join(spark, sf_dir):
     """J2: tiny-dim lookup join with fallback (reference
     postgres_audit_repository.py:41-45,62-67). region is broadcast —
     the 100 TB pattern for any bounded dimension."""
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return (
         nation.join(
             F.broadcast(region),
@@ -471,8 +466,8 @@ def j2_lookup_join(spark, sf_dir):
 
 def j3_anti_join(spark, sf_dir):
     """J3: set difference as left_anti (reference pipeline.py:57-65)."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return customer.join(
         orders, customer.c_custkey == orders.o_custkey, "left_anti"
     ).select("c_custkey", "c_name")
@@ -480,8 +475,8 @@ def j3_anti_join(spark, sf_dir):
 
 def j4_semi_join(spark, sf_dir):
     """J4: set intersection as left_semi (reference ui/audit_dashboard.py:74)."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return customer.join(
         orders, customer.c_custkey == orders.o_custkey, "left_semi"
     ).select("c_custkey", "c_name")
@@ -493,7 +488,7 @@ def j4_semi_join(spark, sf_dir):
 
 def u1_explode_words(spark, sf_dir):
     """U1+A2: array unnest + frequency (reference ui/audit_dashboard.py:178-192)."""
-    documents = _t(spark, sf_dir, "documents")
+    documents = load_table(spark, sf_dir, "documents")
     return (
         documents.select(F.explode(F.split("text", " ")).alias("word"))
         .where(F.col("word") != "")
@@ -506,7 +501,7 @@ def u2_dedup_first(spark, sf_dir):
     """U2: deterministic dedup — keep the lowest event_id per key
     (reference drop_duplicates, postgres_audit_repository.py:68-70;
     made order-stable here, pandas kept first-seen row)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("event_id")
     return (
         events.withColumn("rn", F.row_number().over(w))
@@ -517,8 +512,8 @@ def u2_dedup_first(spark, sf_dir):
 
 def u3_set_except(spark, sf_dir):
     """U3: EXCEPT DISTINCT on key sets (reference set ops, pipeline.py:57-89)."""
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
     return (
         customer.select(F.col("c_nationkey").alias("nationkey"))
         .distinct()
@@ -530,7 +525,7 @@ def o1_sort_topn(spark, sf_dir):
     """O1: global top-N with unique tie-break — TakeOrderedAndProject,
     no full sort shuffle (reference ORDER BY ... DESC,
     postgres_audit_repository.py:34)."""
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     return (
         lineitem.orderBy(
             F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")
@@ -543,7 +538,7 @@ def o1_sort_topn(spark, sf_dir):
 def o2_sort_multikey(spark, sf_dir):
     """O2: multi-key mixed-order sort w/ nulls-last (reference
     postgres_audit_repository.py:104-108)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select(
             "o_orderkey",
@@ -561,7 +556,7 @@ def o2_sort_multikey(spark, sf_dir):
 
 def p9_filter_eq(spark, sf_dir):
     """P9: equality row filter, pushed to the parquet scan."""
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     return lineitem.filter(F.col("l_returnflag") == "R").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
     )
@@ -570,7 +565,7 @@ def p9_filter_eq(spark, sf_dir):
 def p10_size_filter(spark, sf_dir):
     """P10: size(array) predicate (reference jsonb_array_length > 0,
     postgres_audit_repository.py:76-79)."""
-    documents = _t(spark, sf_dir, "documents")
+    documents = load_table(spark, sf_dir, "documents")
     return (
         documents.select(
             "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("token_count")
@@ -581,7 +576,7 @@ def p10_size_filter(spark, sf_dir):
 
 def p11_positive_filter(spark, sf_dir):
     """P11: positive-count filter (reference ui/audit_dashboard.py:164-167)."""
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     return lineitem.filter(F.col("l_discount") > 0.05).select(
         "l_orderkey", "l_linenumber", "l_discount"
     )
@@ -590,7 +585,7 @@ def p11_positive_filter(spark, sf_dir):
 def f5_json_extract(spark, sf_dir):
     """F5: JSON scalar extraction + aggregate (reference jsonb usage,
     postgres_audit_repository.py:78). get_json_object is JVM-side."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
         F.sum(F.get_json_object("props", "$.k").cast("bigint")).alias("k_sum"),
         F.count("*").alias("cnt"),
@@ -612,7 +607,7 @@ def j5_asof_join(spark, sf_dir):
     timeline once. DuckDB oracle uses its native ASOF JOIN, so the
     operator semantics are pinned against a reference implementation.
     """
-    ev = _t(spark, sf_dir, "events").where(
+    ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin("view", "purchase")
     ).select(
         "event_id", "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
@@ -651,9 +646,9 @@ def a13_percent_of_total(spark, sf_dir):
     unpartitioned window is scale-safe — the heavy lifting is the
     map-side-combined revenue aggregate below it; revenue sums are
     DECIMAL-exact before the share division."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
     rev = (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -681,8 +676,8 @@ def orders_backlog_timeline(spark, sf_dir):
     per-order completion date is itself a max aggregate); the cumsum
     window runs over the DAY-cardinality merged series only — the same
     aggregate-then-window discipline as a13_percent_of_total."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     placed = (
         o.select(F.to_date("o_orderdate").alias("day"))
         .groupBy("day").agg(F.count("*").alias("placed"))
@@ -720,7 +715,7 @@ def revenue_date_spine(spark, sf_dir):
     min/max aggregate), never scanned; days are bounded (years x 365)
     regardless of corpus size, so the spine side broadcasts and the
     heavy side remains the map-side-combined daily aggregate."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = (
         o.select(F.to_date("o_orderdate").alias("day"),
                  F.col("o_totalprice").cast("decimal(18,2)").alias("p"))
@@ -765,7 +760,7 @@ def session_top_paths(spark, sf_dir):
     (bounded: PATH_LEN after slice) struct list inside the same
     user-keyed aggregation, and path counting shuffles
     (path, partial-count) rows. Top-K is sort+limit."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros("ts").alias("t_us")
     )
     w_ord = Window.partitionBy("user_id").orderBy("t_us", "event_id")
@@ -812,7 +807,7 @@ def a14_time_rollup(spark, sf_dir):
     granularities (Catalyst's Expand emits one row per grouping per
     input row, all partials map-side-combined) instead of three
     separate scans/aggregations. gid disambiguates the level."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     events.select(
         F.to_date("ts").alias("day"),
         F.to_date(F.date_trunc("week", "ts")).alias("week"),
@@ -838,10 +833,10 @@ def supplier_region_mix(spark, sf_dir):
     to supplier cardinality before touching any dimension; supplier →
     nation → region are broadcast chained; the share derives from the
     5-row region rollup itself (no second fact scan)."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
+    r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
     per_supp = li.groupBy("l_suppkey").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("rev")
     )
@@ -875,8 +870,8 @@ def segment_reorder_cadence(spark, sf_dir):
     window shuffles once on custkey; the percentile aggregate carries
     integer day gaps keyed by 5 segments; the segment attribute rides
     a broadcast-joined dimension."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     gaps = (
         o.select("o_custkey", F.to_date("o_orderdate").alias("od"),
                  "o_orderkey")
@@ -904,7 +899,7 @@ def p13_unpivot_melt(spark, sf_dir):
     (row count x n_measures, but each output row carries 3 columns,
     and downstream per-metric aggregates combine map-side). Aggregated
     here to a per-metric census so the oracle output stays bounded."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     melted = l.select(
         "l_orderkey", "l_linenumber",
         F.col("l_quantity").cast("double").alias("quantity"),
@@ -931,7 +926,7 @@ def orders_monthly_growth(spark, sf_dir):
     lag/ratio window runs over the month-cardinality aggregate output
     (~tens of rows for years of data) — the aggregate-then-window
     discipline again; NULL growth on the first month, not a fake 0."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     monthly = (
         o.select(
             F.to_date(F.date_trunc("month", "o_orderdate")).alias("month"),
@@ -959,7 +954,7 @@ def part_abc_classification(spark, sf_dir):
     AGGREGATE OUTPUT (per-part revenue); class boundaries compare
     EXACT DECIMALS (cum*100 <= total*80), so no float boundary can
     disagree between engines."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     rev = l.groupBy("l_partkey").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("rev")
     # part-cardinality; materialized once so the grand total and the
@@ -996,7 +991,7 @@ def lineitem_2d_histogram(spark, sf_dir):
     (dq_histogram) can't show. Both bucket ids are pure width_bucket
     arithmetic on the scan; one map-side-combined aggregate carries
     50 cells regardless of row count."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.select(
             F.width_bucket(F.col("l_quantity"), F.lit(0.0), F.lit(50.0),
@@ -1016,7 +1011,7 @@ def part_brand_type_pmi(spark, sf_dir):
     and both marginals are count-sized aggregates off one scan (the
     joint frame re-aggregates into each marginal, so the part table is
     read once); marginals broadcast back onto the cells."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     # cell-cardinality; both marginals + the total + the final join all
     # derive from it — barrier = one part-table scan, not four
     joint = p.groupBy("p_brand", "p_type").agg(
@@ -1054,7 +1049,7 @@ def events_user_gini(spark, sf_dir):
     both engines promote before the product). At extreme user counts swap the exact
     rank for quantile-bucketed Lorenz points (same aggregates, bounded
     sort)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     counts = events.groupBy("user_id").agg(F.count("*").alias("x"))
     w = Window.orderBy(F.asc("x"), F.asc("user_id"))
     ranked = counts.withColumn("i", F.row_number().over(w))
@@ -1078,7 +1073,7 @@ def a15_mode_agg(spark, sf_dir):
     mode() returns an ARBITRARY tie member — useless for reproducible
     pipelines, so the engine ships the two-stage form: value counts
     combine map-side, then a rank-1 window over count-sized rows)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     counts = l.groupBy("l_returnflag", "l_quantity").agg(
         F.count("*").alias("cnt")
     )
@@ -1104,7 +1099,7 @@ def events_daily_ohlc(spark, sf_dir):
     ordering makes first/last ordinary map-side-combinable aggregates,
     so the whole bar is ONE shuffle of per-group partials (no window,
     no second pass)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     staged = events.select(
         F.to_date("ts").alias("day"),
         "event_type",
@@ -1131,10 +1126,10 @@ def ship_latency_profile(spark, sf_dir):
     pre-projected to two columns); the exact percentile shuffle
     carries integer day lags keyed by the 5 priorities (swap in
     percentile_approx at 100 TB — cf. dq_histogram_equidepth)."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", F.to_date("o_orderdate").alias("od")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.to_date("l_shipdate").alias("sd")
     )
     lag = (
@@ -1161,7 +1156,7 @@ def events_dow_hour_heatmap(spark, sf_dir):
     value sums per (weekday, hour) cell. Pure calendar projection +
     one 168-cell map-side-combined aggregate. Weekday is Monday=0 in
     both engines (Spark ``weekday``, DuckDB ``isodow - 1``)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return (
         events.select(
             F.weekday("ts").alias("dow"),
@@ -1186,7 +1181,7 @@ def json_key_census(spark, sf_dir):
     Scale shape: json_object_keys is a per-row expression, the explode
     emits (key) tokens only, and the census is a map-side-combined
     count; the total is a 1-row broadcast."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     with_keys = events.where(F.col("props").isNotNull()).select(
         F.explode(F.json_object_keys("props")).alias("key")
     )
@@ -1220,7 +1215,7 @@ def customer_rfm_scores(spark, sf_dir):
     array arithmetic, identical tie semantics in both engines, and the
     thresholds are bit-equal (same interpolation on same inputs — cf.
     corpus_length_trim)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     agg = o.groupBy("o_custkey").agg(
         F.unix_date(F.max("o_orderdate").cast("date")).alias("r_days"),
         F.count("*").alias("freq"),
@@ -1257,7 +1252,7 @@ def tpch_q2_argmin_supplier(spark, sf_dir):
     as a rank-1 window — one shuffle on the group key, no re-join of
     the fact table against its own aggregate). Ties break on supplier
     key, making the argmin row deterministic."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_partkey").orderBy(
         "l_extendedprice", "l_suppkey", "l_orderkey", "l_linenumber"
     )
@@ -1280,7 +1275,7 @@ def j5b_asof_join_forward(spark, sf_dir):
     via the same union + carry window walked in reverse order. Same
     single-shuffle scale shape; DuckDB oracle is the inequality-min
     form (exact but fine at oracle scale)."""
-    ev = _t(spark, sf_dir, "events").where(
+    ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin("view", "purchase")
     ).select(
         "event_id", "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
@@ -1339,7 +1334,7 @@ def j7_interval_join(spark, sf_dir):
     exactly once — no dedup pass. The session build itself is one
     user-keyed window pass (same island pattern as inc_scd2_intervals).
     """
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )
     views = ev.where(F.col("event_type") == "view")
@@ -1398,7 +1393,7 @@ def j6_range_join(spark, sf_dir):
     needed. At 100 TB the bucket key shards the shuffle uniformly in
     time; per-bucket skew (hot users) is AQE's skew-join case.
     """
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.unix_micros("ts").alias("ts_us")
     )
     bucket = F.floor(F.col("ts_us") / RANGE_JOIN_WINDOW_US)
@@ -1430,7 +1425,7 @@ def j6_range_join(spark, sf_dir):
 def w1_running_total(spark, sf_dir):
     """Window extension: per-customer running order total. Exact DECIMAL
     inside the frame, DOUBLE out."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return orders.select(
         "o_orderkey",
@@ -1448,7 +1443,7 @@ def w2_offset_rank_funcs(spark, sf_dir):
     the same per-customer ordered frame (one shuffle + one sort serves
     all four — Spark collapses same-spec window functions into a
     single Window operator)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return orders.select(
         "o_orderkey",
@@ -1467,7 +1462,7 @@ def w3_distribution_funcs(spark, sf_dir):
     forward). One hash shuffle on user_id serves every function; the
     two ordering specs (by value, by time) share the Exchange and
     differ only in their local sorts."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     # NULLS FIRST pinned explicitly on both engines (r10 review: Spark
     # defaults ascending NULLS FIRST, DuckDB NULLS LAST — a NULL value
     # would shift every percent_rank/cume_dist in its partition)
@@ -1494,10 +1489,10 @@ def u5_except_all(spark, sf_dir):
     bag-semantics sibling of u3: each nationkey survives
     max(count_customer - count_supplier, 0) times. Planned as a
     count-tagged aggregate join, one shuffle per side."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
-    s = _t(spark, sf_dir, "supplier").select(
+    s = load_table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").alias("nationkey")
     )
     return c.exceptAll(s)
@@ -1506,7 +1501,7 @@ def u5_except_all(spark, sf_dir):
 def tumbling_window_agg(spark, sf_dir):
     """Batch twin of the streaming tumbling-window aggregation
     (streaming/events.py runs the same plan via readStream)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
@@ -1525,7 +1520,7 @@ def sliding_window_agg(spark, sf_dir):
     windows. Streaming twin: swap the scan for readStream — the plan is
     unchanged (windowed_counts in streaming/events.py takes the window
     spec as an argument)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(
@@ -1555,7 +1550,7 @@ def tpch_q1_pricing_summary(spark, sf_dir):
     round-robin exchanges)."""
     from ..sources.parquet import fan_out
 
-    l = fan_out(spark, _t(spark, sf_dir, "lineitem"))
+    l = fan_out(spark, load_table(spark, sf_dir, "lineitem"))
     qty = F.col("l_quantity").cast("decimal(12,2)")
     price = F.col("l_extendedprice").cast("decimal(12,2)")
     disc = F.col("l_discount").cast("decimal(4,2)")
@@ -1589,9 +1584,9 @@ def tpch_q1_pricing_summary(spark, sf_dir):
 def tpch_q3_shipping_priority(spark, sf_dir):
     """Q3-shaped: filter + 3-way join + agg + deterministic top-10.
     Filters applied before joins so Catalyst pushes them to the scans."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice").cast("decimal(12,2)") * (
         F.lit(1).cast("decimal(4,2)") - F.col("l_discount").cast("decimal(4,2)")
     )
@@ -1615,12 +1610,12 @@ def tpch_q3_shipping_priority(spark, sf_dir):
 def tpch_q5_local_supplier_volume(spark, sf_dir):
     """Q5-shaped: 6-table join; bounded dims (region/nation) broadcast,
     fact-to-fact joins shuffle on their keys."""
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice").cast("decimal(12,2)") * (
         F.lit(1).cast("decimal(4,2)") - F.col("l_discount").cast("decimal(4,2)")
     )
@@ -1644,11 +1639,11 @@ def tpch_q14_promo_revenue(spark, sf_dir):
     share. The shipdate filter reaches the lineitem scan; the part side
     carries only (p_partkey, p_type) after pruning. Exact decimal sums;
     ONE double division at the end keeps both engines bit-identical."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("2024-03-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("2024-06-01").cast("timestamp"))
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice").cast("decimal(12,2)") * (
         F.lit(1).cast("decimal(4,2)") - F.col("l_discount").cast("decimal(4,2)")
     )
@@ -1669,10 +1664,10 @@ def tpch_q14_promo_revenue(spark, sf_dir):
 def u4_set_intersect(spark, sf_dir):
     """U3 completion: INTERSECT (nations having both customers and
     suppliers) — planned as an aggregate + semi-join, no full sort."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
-    s = _t(spark, sf_dir, "supplier").select(
+    s = load_table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").alias("nationkey")
     )
     return c.intersect(s)
@@ -1684,9 +1679,9 @@ def tpch_q18_large_orders(spark, sf_dir):
     is computed FIRST (one map-side-combined agg over lineitem) so the
     subsequent joins touch only qualifying keys — never the reverse
     order, which would join everything and filter last."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     qty = F.col("l_quantity").cast("decimal(18,2)")
     big = (
         l.groupBy("l_orderkey")
@@ -1713,7 +1708,7 @@ def scalar_subquery_above_avg(spark, sf_dir):
     The 1-row aggregate is broadcast into the filter (crossJoin of a
     singleton — Spark plans it as a BroadcastNestedLoopJoin), so the
     fact side streams once with no shuffle."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     avg_price = o.agg(
         (
             F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double")
@@ -1734,11 +1729,11 @@ def tpch_q4_order_priority(spark, sf_dir):
     across the shuffle, the quarter filter pushes into the orders
     scan, and the correlated ship>order predicate rides the equi-join
     as a residual (no cross product)."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-04-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
         o.join(
             l,
@@ -1757,11 +1752,11 @@ def tpch_q16_supplier_cnt(spark, sf_dir):
     negative balance (the 'complaints' NOT IN subquery). The anti-join
     side is dim-sized and broadcast; count_distinct shuffles only
     (group-key, suppkey) pairs."""
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         ~F.col("p_brand").startswith("Brand#1") & (F.col("p_size") <= 25)
     )
-    l = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    l = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    bad = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
     )
     return (
@@ -1793,10 +1788,10 @@ def tpch_q21_waiting_supplier(spark, sf_dir):
     semi/anti probes then reuse that same (l_orderkey)-partitioned
     frame — three hash joins on one key, no cross products, output
     per-supplier counts."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     lines = l.join(o, l.l_orderkey == o.o_orderkey).select(
@@ -1826,7 +1821,7 @@ def tpch_q21_waiting_supplier(spark, sf_dir):
             "left_anti",
         )
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         waiting.join(F.broadcast(s), waiting.l_suppkey == s.s_suppkey)
         .groupBy("s_name")
@@ -1853,7 +1848,6 @@ def w4_windowed_distinct_count(spark, sf_dir):
     (type,user) aggregate; the window runs over |types| x |days| rows
     only. The naive alternative (collect_set over a window) ships every
     user id through every frame — O(days x users) state."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     day = F.to_date("ts").alias("day")
     firsts = (

@@ -23,7 +23,6 @@ from ..functions.text import (
     shingle_hashes,
     word_hashes,
 )
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 SPLIT_BUCKETS = 100
@@ -52,13 +51,7 @@ Z_FENCE = 2.5
 
 
 def _docs(spark, sf_dir):
-    tune_for_oracle(spark)
     return fan_out(spark, load_table(spark, sf_dir, "documents"))
-
-
-def _t(spark, sf_dir, name):
-    tune_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _df_capped_contaminated(screened_ex, bench, n_screened):
@@ -228,7 +221,7 @@ def events_anomaly_zscore(spark, sf_dir):
     z arithmetic is double but every operand derives from exact integer
     sums in identical order on both engines, so results are
     bit-identical."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.groupBy(F.to_date("ts").alias("day"))
         .agg(F.count("*").alias("cnt"))
@@ -282,7 +275,7 @@ def orders_pareto_frontier(spark, sf_dir):
     anti-join runs broadcast over candidates only. Result is exact and
     deterministic; only phase-1's pruning ratio depends on the bucket
     width."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.to_date("o_orderdate").alias("order_day")
     )
     pb = F.floor(F.col("o_totalprice") / F.lit(PRICE_BUCKET)).alias("pb")
@@ -469,7 +462,7 @@ def dq_benford_firstdigit(spark, sf_dir):
     classic fabricated-data / unit-mixing smoke test for a money
     column. One aggregate; the digit extraction is a map-side
     expression (floor(p / 10^floor(log10 p)))."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0)
     digit = F.floor(
         F.col("o_totalprice")
         / F.pow(F.lit(10.0), F.floor(F.log10("o_totalprice")))
@@ -514,7 +507,7 @@ def ts_ewma(spark, sf_dir):
     recursive form would need a sequential scan per user; truncating at
     5 taps (weight < 7% beyond) makes it a fixed-width window
     expression with identical double arithmetic on both engines."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     lags = [F.col("value")] + [
         F.lag("value", i).over(w) for i in range(1, EWMA_TAPS)
@@ -553,7 +546,7 @@ def ts_changepoint_split(spark, sf_dir):
     the "exhaustive" scan is O(days), not O(days x rows). The argmax
     is a deterministic top-1 with day tie-break. Means are
     double(exact-integer sums)/counts in identical operand order."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.groupBy(F.to_date("ts").alias("day"))
         .agg(F.count("*").alias("cnt"))

@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 DAMPING = 0.85
@@ -41,12 +40,24 @@ def _parse_bytes(s: str) -> int:
     """Parse a Spark byte-size conf string ("10MB", "10m", "10485760b",
     "-1") to bytes. Only the suffixes Spark itself accepts."""
     s = s.strip().lower()
-    for suf, mult in (("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20),
-                      ("kb", 1 << 10), ("t", 1 << 40), ("g", 1 << 30),
-                      ("m", 1 << 20), ("k", 1 << 10), ("b", 1)):
+    for suf, mult in (("pb", 1 << 50), ("tb", 1 << 40), ("gb", 1 << 30),
+                      ("mb", 1 << 20), ("kb", 1 << 10), ("p", 1 << 50),
+                      ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20),
+                      ("k", 1 << 10), ("b", 1)):
         if s.endswith(suf):
             return int(float(s[: -len(suf)]) * mult)
     return int(s)
+
+
+def _broadcast_threshold(conf: str) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes; a string
+    ``_parse_bytes`` cannot read counts as -1 (broadcast off), so the
+    auto layout falls back to "src" instead of failing the query —
+    correct in both regimes, one extra exchange per round at worst."""
+    try:
+        return _parse_bytes(conf)
+    except ValueError:
+        return -1
 
 
 # Conservative per-row bytes of the (node bigint, rank double) state
@@ -184,7 +195,7 @@ def pagerank(edges: DataFrame, damping: float = DAMPING,
     # ``layout`` explicitly to skip the sizing job.
     if layout is None:
         spark = adj.sparkSession
-        thresh = _parse_bytes(
+        thresh = _broadcast_threshold(
             str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold")))
         if thresh <= 0:
             layout = "src"
@@ -222,7 +233,6 @@ def pagerank_ranks(spark, sf_dir):
     registry entry is graph_pagerank_parts below."""
     from .association import copurchase_pairs
 
-    tune_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     edges = copurchase_pairs(li, min_count=1).select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")
@@ -276,7 +286,6 @@ def graph_triangle_count(spark, sf_dir):
     from the degree aggregate (sum d*(d-1)/2), not a join."""
     from .association import copurchase_pairs
 
-    tune_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     edges = (
         copurchase_pairs(li, min_count=1)
@@ -344,7 +353,6 @@ def graph_label_propagation(spark, sf_dir):
     """
     from .association import copurchase_pairs
 
-    tune_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     und = copurchase_pairs(li, min_count=1).select(
@@ -463,7 +471,6 @@ def graph_kcore_parts(spark, sf_dir):
     monotonicity once converged)."""
     from .association import copurchase_pairs
 
-    tune_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     edges = copurchase_pairs(li, min_count=KCORE_MIN_PAIR).select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")

@@ -29,15 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 RUN_TS = "2024-06-01 00:00:00"
-
-
-def _t(spark, sf_dir, name):
-    tune_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -47,7 +41,7 @@ def _t(spark, sf_dir, name):
 def f1_string_funcs(spark, sf_dir):
     """lower/trim normalization, schema.table concat, substring, length
     (the reference's identifier + boolean-string handling)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
         F.lower(F.trim(F.col("c_name"))).alias("name_norm"),
@@ -66,7 +60,7 @@ def f2_datetime_funcs(spark, sf_dir):
     """strftime-style presentation formatting, date-part extraction,
     month truncation, day arithmetic (reference strftime output format +
     ::date truncation)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("date_str"),
@@ -86,7 +80,7 @@ def f2_datetime_funcs(spark, sf_dir):
 def f3_numeric_funcs(spark, sf_dir):
     """int()-style truncation toward zero, Decimal(str()) exact cast,
     abs/mod, bool(number) (reference transformer.py:58-63,117-118)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         # Python int(float) truncates toward zero; Spark's double->int
@@ -111,7 +105,7 @@ def f4_array_funcs(spark, sf_dir):
     """Array build (split), size, distinct+sort, union with a constant
     set, join-back — the reference's missing-columns list algebra
     (build/len/sorted/set-union)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     words = F.split("p_name", " ")
     return p.select(
         "p_partkey",
@@ -132,7 +126,7 @@ def f4_array_funcs(spark, sf_dir):
 def o3_sort_alpha(spark, sf_dir):
     """ORDER BY name ASC over a small dimension (reference sorts every
     report listing alphabetically)."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     return n.select("n_nationkey", "n_name").orderBy(F.asc("n_name"))
 
 
@@ -145,7 +139,7 @@ def p7_raw_json_roundtrip(spark, sf_dir):
     prove the passthrough is lossless by re-extracting every mapped
     attribute from the raw string (reference keeps raw_json beside the
     mapped columns, pipeline.py:231-233)."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     raw = F.to_json(F.struct("n_nationkey", "n_name", "n_regionkey"))
     docs = n.select(raw.alias("raw_json"))
     return docs.select(
@@ -164,7 +158,7 @@ def p8_audit_enrichment(spark, sf_dir):
     source collection, status (reference audit.py:4-10). The run
     timestamp is pinned for determinism (the engine default is
     current_timestamp(), transform.py)."""
-    r = _t(spark, sf_dir, "region")
+    r = load_table(spark, sf_dir, "region")
     return r.select(
         "r_regionkey",
         "r_name",
@@ -192,7 +186,7 @@ def p12_scalar_lookup(spark, sf_dir):
     — expressed as element_at(create_map(...)) so it stays a codegen'd
     expression, no join, no shuffle. The companion fillna+int-cast
     mirrors :100-102."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     pairs = []
     for k, v in _NATION_SHORT.items():
         pairs.extend([F.lit(k), F.lit(v)])
@@ -216,7 +210,7 @@ def a7_report_accumulation(spark, sf_dir):
     Re-derived as ONE partial-aggregated groupBy: counts are map-side
     combined; the set union is collect_set (bounded: the value domain is
     the mapped column list, not the row count)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy(F.col("l_returnflag").alias("collection"))
         .agg(

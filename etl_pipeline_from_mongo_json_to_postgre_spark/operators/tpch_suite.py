@@ -21,17 +21,10 @@ analytics extension.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _dec_price() -> F.Column:
@@ -61,7 +54,7 @@ def tpch_q6_forecast_revenue(spark, sf_dir):
     pushed-down predicates and a map-side partial sum; the shuffle
     carries exactly one partial row per task. The discount band compares
     in DECIMAL(4,2) so 0.05/0.07 double noise can't flake the boundary."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -85,14 +78,14 @@ def tpch_q7_volume_shipping(spark, sf_dir):
     are lineitem⋈orders and orders⋈customer on their keys. The pair
     filter lands on the joined row (Catalyst pushes each nation-name
     IN-list into its broadcast side)."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     n1 = n.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     ).filter(F.col("supp_nation").isin("NATION_1", "NATION_2"))
@@ -124,8 +117,8 @@ def tpch_q8_market_share(spark, sf_dir):
     ONE aggregate (conditional sum), so the fact is scanned once. The
     share division is the only fp op: double(exact target)/double(exact
     total), identical operand order in the oracle."""
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    n = load_table(spark, sf_dir, "nation")
     cust_nations = (
         n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .select(F.col("n_nationkey").alias("cn_key"))
@@ -133,14 +126,14 @@ def tpch_q8_market_share(spark, sf_dir):
     supp_nation = n.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select("p_partkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = _t(spark, sf_dir, "orders").filter(
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select("p_partkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey", "o_orderdate")
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     zero = F.lit(0).cast("decimal(16,4)")
     rev = _rev().cast("decimal(16,4)")
     is_target = F.col("supp_nation") == "NATION_3"
@@ -175,14 +168,14 @@ def tpch_q9_product_profit(spark, sf_dir):
     supplier's nation per order year. part filter prunes before the fact
     join; nation broadcast at the end keys only 25 values."""
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%red%"))
         .select("p_partkey")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    l = _t(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .join(o, l.l_orderkey == o.o_orderkey)
@@ -205,13 +198,13 @@ def tpch_q10_returned_items(spark, sf_dir):
     customer, deterministic top-20 (revenue desc, custkey asc tie-break
     — revenue is exact DECIMAL when ranked, cast to double only on
     output). TakeOrdered(20) instead of a global sort."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -241,10 +234,10 @@ def tpch_q11_important_parts(spark, sf_dir):
     The grouped frame is materialized ONCE (eager localCheckpoint) and
     feeds both the global scalar and the filtered output — the scalar
     rides a broadcast crossJoin, never a second fact scan."""
-    s = _t(spark, sf_dir, "supplier").filter(F.col("s_nationkey") == 5).select(
+    s = load_table(spark, sf_dir, "supplier").filter(F.col("s_nationkey") == 5).select(
         "s_suppkey"
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     val = (_dec_price() * F.col("l_quantity").cast("decimal(12,2)")).cast(
         "decimal(20,4)"
     )
@@ -281,10 +274,10 @@ def tpch_q12_late_priority(spark, sf_dir):
     priorities among 1996 shipments, split by whether the line shipped
     more than 90 days after the order date. One join, one aggregate, no
     window."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
@@ -309,8 +302,8 @@ def tpch_q13_customer_distribution(spark, sf_dir):
     count 0), then the distribution of customers per order count. First
     aggregate keys on c_custkey (shuffle |customers|), second on c_count
     (shuffle |distinct counts| — tiny)."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "4-NOT SPECIFIED"
     ).select("o_orderkey", "o_custkey")
     return (
@@ -331,11 +324,11 @@ def tpch_q15_top_supplier(spark, sf_dir):
     supplier(s) by comparing each row to the broadcast global max in
     exact DECIMAL (ties kept, like the spec's nested-subquery form).
     Grouped frame materialized once for both consumers."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     per_supp = (
         l.groupBy("l_suppkey")
         .agg(F.sum(_rev()).alias("rev_dec"))
@@ -366,11 +359,11 @@ def tpch_q17_small_quantity_revenue(spark, sf_dir):
     threshold is double(exact sum)/count*0.2 with identical operand
     order on both engines."""
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") == "Brand#23")
         .select("p_partkey")
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     lp = l.join(F.broadcast(p), l.l_partkey == p.p_partkey).select(
         "l_partkey", "l_quantity", "l_extendedprice"
     ).localCheckpoint(eager=True)
@@ -400,8 +393,8 @@ def tpch_q19_disjunctive_revenue(spark, sf_dir):
     residual filter on one equi-join (never a union of three scans);
     Catalyst pushes the derivable size/quantity envelopes to the
     scans."""
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    l = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    l = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity")
     band = (
         ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5)
@@ -429,12 +422,12 @@ def tpch_q20_promotion_suppliers(spark, sf_dir):
     names. The IN-chains decorrelate into aggregates + equi-joins, the
     shape Q20's nested INs always optimize to."""
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_type") == "SMALL")
         .select("p_partkey")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
@@ -462,9 +455,9 @@ def tpch_q22_dormant_customers(spark, sf_dir):
     Shape preserved: scalar subquery (avg positive balance) broadcast
     into the filter + LEFT ANTI join against recent orders + final
     nation census."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    recent = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    recent = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     ).select("o_custkey")
     avg_bal = (

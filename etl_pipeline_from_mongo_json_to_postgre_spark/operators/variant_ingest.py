@@ -27,7 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from .transform_queries import _orders_as_docs
 
 
@@ -36,7 +35,6 @@ def p1_variant_projection(spark, sf_dir):
     try_variant_get per mapped attribute (bigint/string/double/date
     casts ride the variant getter; missing attribute -> NULL ->
     missing_cols marker), output identical to p1_mapped_projection."""
-    tune_for_oracle(spark)
     docs = _orders_as_docs(spark, sf_dir)
     staged = docs.select(F.parse_json("raw_json").alias("doc"))
     vg = F.try_variant_get

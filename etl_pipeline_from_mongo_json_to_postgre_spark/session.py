@@ -1,113 +1,94 @@
-"""SparkSession construction tuned for this engine.
+"""The one place that decides SparkSession configuration.
 
-Local testing runs on local[N]; the same settings (AQE, shuffle
-partitions sized to cores, UTC session time) are what you'd set on a
-real cluster, where ``spark.sql.shuffle.partitions`` should instead be
-sized to ~2-3x total executor cores and AQE left on to coalesce.
+Contract: every session this project builds comes from ``get_spark``
+(tests, bench, CLI, tools; only ``tools/parity_probe.py`` builds a plain
+default session, on purpose, to mirror the driver). A session built by
+someone else — the external driver hands its own default, ANSI-on
+session to ``__spark_entry__`` — is tuned once per entry call at the
+registry boundary (``__spark_entry__._ntz_outputs``) by
+``tune_for_oracle``. Operators never tune the session themselves (a few
+scope one conf around a single read or checkpoint and restore it).
+
+Both functions read ``SQL_CONFS``: the runtime-settable confs every
+query runs under. AQE is left at Spark's defaults (enabled, coalescing,
+skew-join splitting); on a real cluster size
+``spark.sql.shuffle.partitions`` to ~2-3x total executor cores.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
+
+SQL_CONFS = {
+    # Oracle parity: UTC timestamps (DuckDB timestamps are UTC-naive)
+    # and non-ANSI, NULL-on-failure casts — the reference's
+    # error-capturing transform semantics.
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.ansi.enabled": "false",
+    # tz-less parquet timestamps read as TIMESTAMP (LTZ, UTC session),
+    # not TIMESTAMP_NTZ — watermarks/unix_micros require TIMESTAMP; the
+    # loader also casts defensively (sources/parquet.py)
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Perf-only (r9): accept SUBSET-key co-partitioning for shuffled
+    # joins. When a join input is already hash-partitioned on a key
+    # that is a pure function of the join key and appears in the
+    # equi-join condition (mm_pack's shard layout), the default (true)
+    # would re-shuffle both sides onto the full key set and then
+    # shuffle AGAIN for any downstream window/aggregate keyed on the
+    # subset — two wasted full-data exchanges. Only relaxes plans whose
+    # children are ALREADY partitioned on a join-key subset; everything
+    # else plans identically (plan pins + census budgets re-verified).
+    # The subset key must carry enough distinct values for parallelism
+    # — the caller's contract, see mm_pack.
+    "spark.sql.requireAllClusterKeysForCoPartition": "false",
+}
 
 
 def get_spark(app_name: str = "etl_pipeline_from_mongo_json_to_postgre_spark",
-              cpus: int | None = None) -> SparkSession:
+              cpus: int | None = None, master: str | None = None) -> SparkSession:
+    """Build (or reuse) the engine's session: ``master`` defaults to
+    ``local[cpus]``, and shuffle partitions are sized to ``cpus``."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalesce target 256m (r14 config A/B; guide §2.2/§9): a
-        # BYTE-size target, so it is scale-adaptive by construction —
-        # locally it coalesces the tiny post-shuffle partitions harder
-        # (measured -5..-6% across two disjoint 7-8 entry interleaved
-        # subsets at sf0.1), on a cluster it lands partitions in the
-        # 100 MB-1 GB band §2.2 prescribes instead of the 64 MB
-        # default's finer split. Results unaffected (AQE runtime
-        # coalescing only).
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-        # explicit (it defaults on with AQE): runtime splitting of skewed
-        # shuffle partitions in sort-merge joins — first line of defense
-        # before the manual salting in operators/skew.py
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # accept subset-key co-partitioning for shuffled joins (see
-        # tune_for_oracle for the rationale — the mm_pack shard layout)
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        # tz-less parquet timestamps read as TIMESTAMP (LTZ, UTC session),
-        # not TIMESTAMP_NTZ — watermarks/unix_micros require TIMESTAMP
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+    builder = SparkSession.builder.master(master or f"local[{cpus}]").appName(app_name)
+    spark = builder.config(map={
+        **SQL_CONFS,
+        "spark.sql.shuffle.partitions": str(cpus),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
         # codegen-heavy plans (multi-format casts) generate a lot of JIT
         # code over a long suite; keep the code cache from filling
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing")
-    )
-    spark = builder.getOrCreate()
+        "spark.driver.extraJavaOptions":
+            "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
+    }).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
 def tune_for_oracle(spark: SparkSession) -> SparkSession:
-    """Runtime-settable confs we need regardless of who built the session.
+    """Apply ``SQL_CONFS`` to a session someone else built.
 
-    The correctness driver hands us its own SparkSession; these two confs
-    are runtime-settable and required for oracle parity: UTC timestamps
-    (DuckDB timestamps are UTC-naive) and non-ANSI casts (NULL-on-failure
-    cast semantics, matching the reference's error-capturing transform).
+    Shuffle partitions follow the session's real parallelism (at least
+    8) instead of the 200 default: on a local[N] driver session the
+    default costs ~6x task-launch overhead per shuffle, which compounds
+    in iterative operators (dedup_components). Perf-only.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-    except Exception:
-        pass  # fine if fixed by the hosting session; we also use try_* forms
-    try:
-        # tz-less parquet timestamps -> TIMESTAMP_LTZ (UTC), never NTZ;
-        # the loader also casts defensively (sources/parquet.py)
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
-    # Perf-only (no correctness impact): size shuffle partitions to the
-    # session's real parallelism instead of the 200 default — on a
-    # local[N] driver session the default costs ~6x task-launch
-    # overhead per shuffle, which compounds brutally in iterative
-    # operators (dedup_components). Same rule our own get_spark applies.
+    confs = dict(SQL_CONFS)
     try:
         cores = spark.sparkContext.defaultParallelism
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(cores, 8)))
-    except Exception:
-        pass
-    # AQE coalesce target 256m — same rationale as get_spark (r14):
-    # byte-size target, scale-adaptive; measured -5..-6% locally.
-    try:
-        spark.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-    except Exception:
-        pass
-    # Planner default (perf-only, r9): accept SUBSET-key co-partitioning
-    # for shuffled joins. When a join input is already hash-partitioned
-    # on a key that is a pure function of the join key and appears in
-    # the equi-join condition (mm_pack's shard layout), the default
-    # (true) would re-shuffle both sides onto the full key set and then
-    # shuffle AGAIN for any downstream window/aggregate keyed on the
-    # subset — two wasted full-data exchanges. Only relaxes plans whose
-    # children are ALREADY partitioned on a join-key subset; everything
-    # else plans identically (full plan-pin suite + census budgets
-    # re-verified after the flip). The subset key must carry enough
-    # distinct values for parallelism — the caller's contract, see
-    # mm_pack.
-    try:
-        spark.conf.set(
-            "spark.sql.requireAllClusterKeysForCoPartition", "false")
-    except Exception:
-        pass
+        confs["spark.sql.shuffle.partitions"] = str(max(cores, 8))
+    except PySparkException:
+        pass  # no SparkContext to ask (Spark Connect): keep the host's
+    for key, value in confs.items():
+        try:
+            spark.conf.set(key, value)
+        except PySparkException:
+            # a hosting session may pin a conf; only the UTC pin is
+            # indispensable (casts also use the try_* forms)
+            if key == "spark.sql.session.timeZone":
+                raise
     return spark

@@ -20,7 +20,8 @@ plain TimestampType (TIMESTAMP_LTZ):
   as TIMESTAMP_NTZ, which breaks ``withWatermark`` / ``unix_micros``
   call sites. We disable the inference per-read and additionally cast
   any NTZ column that still escapes to ``timestamp``. The session
-  timezone is pinned UTC (session.tune_for_oracle), so NTZ->LTZ is
+  timezone is pinned UTC (session.SQL_CONFS: set by get_spark, or at
+  the registry boundary for a foreign session), so NTZ->LTZ is
   value-preserving and DuckDB (UTC-naive) parity holds.
 """
 

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import word_hashes
 from ..operators.chunking import _DUCK_CHUNKS, _WORDS, CHUNK_STRIDE, CHUNK_TOKENS
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 
@@ -53,7 +52,6 @@ def stream_chunk_length_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilt identically here), one complete-mode aggregate over
     n_tokens. Oracle = the same census in batch SQL over the chunk
     CTE."""
-    tune_for_oracle(spark)
     stream = documents_stream(spark, sf_dir)
     w = _WORDS(F.col("text"))
     staged = stream.where(F.size(w) > 0).select(
@@ -100,7 +98,6 @@ def stream_ann_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _require_trained()
-    tune_for_oracle(spark)
     load_table(spark, sf_dir, "embeddings")  # sets reader confs
     src = os.path.join(sf_dir, "embeddings.parquet")
     schema = spark.read.parquet(src).schema

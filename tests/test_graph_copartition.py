@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_from_mongo_json_to_postgre_spark.operators.graph import (
+    _broadcast_threshold,
     _parse_bytes,
     checkpoint_partitioned,
     pagerank,
@@ -153,6 +154,23 @@ def test_pagerank_layout_decision_boundaries():
     assert _parse_bytes("10485760b") == ten_mb
     assert _parse_bytes("10485760") == ten_mb
     assert _parse_bytes("-1") == -1
+
+
+@pytest.mark.parametrize("conf, nbytes, layout", [
+    ("10MB", 10 << 20, "dst"),
+    ("1p", 1 << 50, "dst"),
+    ("1pb", 1 << 50, "dst"),
+    ("-1", -1, "src"),
+    # Spark itself rejects this string; a threshold from some other
+    # source must still not fail the query
+    ("garbage", -1, "src"),
+])
+def test_pagerank_auto_layout_on_odd_threshold_strings(conf, nbytes, layout):
+    """Every byte suffix Spark accepts (incl. p/pb) parses; an
+    unparseable threshold falls back to the src layout, not a
+    ValueError."""
+    assert _broadcast_threshold(conf) == nbytes
+    assert pagerank_layout_for(97, _broadcast_threshold(conf)) == layout
 
 
 def test_pagerank_explicit_layout_param_respected(smj_spark):

@@ -11,7 +11,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from etl_pipeline_from_mongo_json_to_postgre_spark import pipeline
+from etl_pipeline_from_mongo_json_to_postgre_spark import pipeline, session
 from etl_pipeline_from_mongo_json_to_postgre_spark.cli import main as cli_main
 from etl_pipeline_from_mongo_json_to_postgre_spark.errors import ConfigError
 
@@ -159,7 +159,23 @@ def test_invalid_mapping_raises(spark):
         }})
 
 
-def test_cli_end_to_end(spark, tmp_path, schema_sql):
+@pytest.fixture
+def cli_sessions(spark, monkeypatch):
+    """Hand cli.main the shared fixture session and record its
+    get_spark calls: a real get_spark would re-apply its confs
+    (shuffle partitions sized to this host) to the session every later
+    test shares."""
+    calls = []
+
+    def get_spark(*args, **kwargs):
+        calls.append(kwargs)
+        return spark
+
+    monkeypatch.setattr(session, "get_spark", get_spark)
+    return calls
+
+
+def test_cli_end_to_end(spark, cli_sessions, tmp_path, schema_sql):
     inp = tmp_path / "input.json"
     inp.write_text(json.dumps(INPUT))
     mapping = tmp_path / "mapping.json"
@@ -168,16 +184,18 @@ def test_cli_end_to_end(spark, tmp_path, schema_sql):
     rc = cli_main([
         "--input", str(inp), "--mapping-config", str(mapping),
         "--output-dir", str(out), "--master", "local[4]",
-        "--shuffle-partitions", "4",
     ])
     assert rc == 0
+    # the CLI runs with the engine's session semantics (UTC,
+    # NULL-on-failure casts), not a hand-built session of its own
+    assert [c.get("master") for c in cli_sessions] == ["local[4]"]
     audit = spark.read.parquet(str(out / "ingestion_audit.parquet"))
     assert audit.count() == 5  # no schema.sql -> no missing-table row
     data = spark.read.parquet(str(out / "data_customers.parquet"))
     assert data.count() == 3
 
 
-def test_cli_error_exit(tmp_path, capsys):
+def test_cli_error_exit(cli_sessions, tmp_path, capsys):
     rc = cli_main([
         "--input", str(tmp_path / "missing.json"),
         "--mapping-config", str(tmp_path / "missing.yaml"),

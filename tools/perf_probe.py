@@ -5,8 +5,9 @@ Usage:
     python tools/perf_probe.py [entry ...] [--reps N]
         [--plans TAG] [--plans-dir rNN] [--out FILE]
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 by default.
+    SPARK_GRAFT_CPUS sets the local[N] width (default: all cores).
 
-For every entry, on ONE warmed session (bench confs + UI enabled):
+For every entry, on ONE warmed ``session.get_spark`` session:
   - best-of-N noop wall (the bench methodology),
   - planning time (df construction + executedPlan materialization),
   - number of Spark jobs the timed action launches (fixed-overhead
@@ -45,33 +46,6 @@ DEFAULT_ENTRIES = [
 ]
 
 
-def build_session(cpus: int):
-    """bench-equivalent session with the UI on for stage inspection."""
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("perf_probe")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4055")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing")
-        .getOrCreate()
-    )
-
-
 def explain_formatted(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -94,9 +68,10 @@ def main() -> None:
     entries = args.entries or DEFAULT_ENTRIES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    from etl_pipeline_from_mongo_json_to_postgre_spark.session import get_spark
+
+    spark = get_spark(app_name="perf_probe")
+    cpus = spark.sparkContext.defaultParallelism
 
     from __spark_entry__ import queries
 
